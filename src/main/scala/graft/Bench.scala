@@ -176,19 +176,29 @@ object Bench {
     }
     val artifactSec = artifactTimes.map(_._2).filter(_ >= 0).sum
 
-    val results = selected.map { case (name, fn) =>
-      val best = (1 to repeat).map { _ =>
-        val t0 = System.nanoTime()
-        try { consume(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }.min
+    // A query that throws is logged and left out of `results` and the
+    // total, so it reads as dropped, never as a fast time; its remaining
+    // repetitions are skipped.
+    def timeOnce(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { consume(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(
+          s"# query_failed $name ${e.getClass.getName}: ${e.getMessage}")
+        None
+      }
+    }
+    val results = selected.flatMap { case (name, fn) =>
+      val times = Iterator.continually(timeOnce(name, fn)).take(repeat)
+        .takeWhile(_.isDefined).flatten.toSeq
       // Queries that localCheckpoint internally (CC, LSH pairs) leave
       // block-manager entries pinned until the ContextCleaner sees their
       // RDDs garbage-collected; with a 32g heap that can take the whole
       // run. Nudge GC between queries so one query's leftovers don't
       // inflate the next one's time.
       System.gc()
-      name -> best
+      Option.when(times.length == repeat)(name -> times.min)
     }
     // The raw end probe is systematically inflated by post-run session
     // state even on a quiet machine (r9: the QUIET capture read 3.7×

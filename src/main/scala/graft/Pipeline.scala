@@ -27,11 +27,28 @@ import graft.ingest.{NdjsonReader, WatermarkStore}
   */
 object Pipeline {
 
-  /** @param jdbcConnect when set, also load the warehouse the way the
+  /** Declared schema of the `$outDir/identity` snapshot: reading it with
+    * this schema skips parquet's schema-inference job. */
+  private val IdentitySchema = "alias_id string, canonical_id string"
+
+  /** One batch: the files after the watermark → events parquet (append) →
+    * identity closure parquet (overwrite, only when the batch carries an
+    * identity edge) → optional warehouse load → watermark advance.
+    *
+    * The batch reads only what it needs: files at or below the watermark
+    * are pruned at planning time (see [[NdjsonReader.rawLines]]), one
+    * aggregate over the checkpointed events gives the event count, the
+    * batch's highest `file_no` and whether any row yields an identity
+    * edge, and the identity snapshot is read with its declared schema.
+    *
+    * @param jdbcConnect when set, also load the warehouse the way the
     *        reference does: append this batch's events to `tb_event` and
     *        refresh `tb_identity` with the current closure snapshot
     *        (truncate + reload — the closure REWRITES assignments when a
     *        bridge merges clusters, so append-only rows would go stale).
+    *        A batch that computed a closure loads it from its checkpoint;
+    *        otherwise the snapshot is re-read from parquet.
+    * @return (events ingested, previous watermark or -1)
     */
   def run(spark: SparkSession, inDir: String, outDir: String,
           watermarkFile: Option[String],
@@ -42,35 +59,38 @@ object Pipeline {
       .withColumn("event_date", to_date(col("ts")))
       .localCheckpoint(eager = true) // read input once; feeds 3 consumers
 
-    val nEvents = events.count()
+    val stats = events.agg(count(lit(1)), max(col("file_no")),
+      max(IdentityEdges.hasEdge)).head()
+    val nEvents = stats.getLong(0)
     if (nEvents > 0) {
       events.write.mode("append")
         .partitionBy("event_date")
         .parquet(s"$outDir/events")
 
-      // alias events PLUS the reference's 'updated email' edge folding
-      // (person—new_email, new_email—previous_email)
-      val edges = IdentityEdges.fromEvents(events)
-      if (!edges.isEmpty) {
+      val idDir = s"$outDir/identity"
+      val closure = Option.when(stats.getBoolean(2)) {
+        // alias events PLUS the reference's 'updated email' edge folding
+        // (person—new_email, new_email—previous_email)
+        val edges = IdentityEdges.fromEvents(events)
         // Incremental merge: union the delta's edges with the EXISTING
         // assignments (themselves edges node—canonical) before closure —
         // otherwise a delta batch would overwrite the table with only its
         // own components and a bridging edge would never merge two
         // pre-existing clusters (the reference's G2 bug this engine fixes,
         // /root/reference/src/Operations/FileImporter.php:104-130).
-        val idDir = s"$outDir/identity"
         val existing =
           if (Files.exists(Paths.get(idDir)))
-            spark.read.parquet(idDir)
+            readIdentity(spark, idDir)
               .select(col("alias_id").as("person"), col("canonical_id").as("alias"))
           else spark.emptyDataFrame
             .select(lit("").as("person"), lit("").as("alias")).limit(0)
-        Components.connectedComponentsString(existing.union(edges))
+        val c = Components.connectedComponentsString(existing.union(edges))
           .withColumnRenamed("id", "alias_id")
           // materialize off the source dir before overwriting it (write
           // would otherwise truncate the parquet it is lazily reading)
           .localCheckpoint(eager = true)
-          .write.mode("overwrite").parquet(idDir)
+        c.write.mode("overwrite").parquet(idDir)
+        c
       }
 
       // optional warehouse load — the reference's actual sink
@@ -80,23 +100,24 @@ object Pipeline {
         graft.sink.JdbcSink.writeEvolving(
           events.drop("event_date"), "tb_event", connect,
           maxVarchar = jdbcMaxVarchar)
-        if (Files.exists(Paths.get(s"$outDir/identity"))) {
-          truncateIfExists(connect, "tb_identity")
-          graft.sink.JdbcSink.writeEvolving(
-            spark.read.parquet(s"$outDir/identity")
-              .withColumnRenamed("canonical_id", "id")
-              .withColumnRenamed("alias_id", "alias"),
-            "tb_identity", connect, maxVarchar = jdbcMaxVarchar)
-        }
+        closure
+          .orElse(Option.when(Files.exists(Paths.get(idDir)))(readIdentity(spark, idDir)))
+          .foreach { ids =>
+            truncateIfExists(connect, "tb_identity")
+            graft.sink.JdbcSink.writeEvolving(
+              ids.withColumnRenamed("canonical_id", "id")
+                .withColumnRenamed("alias_id", "alias"),
+              "tb_identity", connect, maxVarchar = jdbcMaxVarchar)
+          }
       }
 
-      watermarkFile.foreach { f =>
-        val maxFile = events.agg(max(col("file_no"))).head().getLong(0)
-        WatermarkStore.advance(f, maxFile)
-      }
+      watermarkFile.foreach(WatermarkStore.advance(_, stats.getLong(1)))
     }
     (nEvents, wm.getOrElse(-1L))
   }
+
+  private def readIdentity(spark: SparkSession, idDir: String) =
+    spark.read.schema(IdentitySchema).parquet(idDir)
 
   private[graft] def truncateIfExists(connect: () => java.sql.Connection,
                                table: String): Unit = {

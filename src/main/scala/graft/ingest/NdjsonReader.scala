@@ -113,9 +113,19 @@ object NdjsonReader {
     * Batch analog of the reference's "process files after the high
     * watermark, in order" contract; the streaming analog is a checkpointed
     * file source (see graft.streaming.StreamIngest).
+    *
+    * With a watermark, files at or below it are pruned at planning time:
+    * the filter on the file-constant `_metadata.file_path` is pushed into
+    * Spark's file index, so those files are never split or opened. Spark's
+    * own listing and splitting stay, and `file` is still
+    * `input_file_name()`. The per-row `file_no > wm` filter stays too, so
+    * pruning can only skip a file, never let one in.
     */
   def rawLines(spark: SparkSession, path: String, watermark: Option[Long] = None): DataFrame = {
-    val base = spark.read.textFile(path).toDF("line")
+    val text = spark.read.text(path)
+    val pruned = watermark.fold(text)(wm =>
+      text.filter(fileNo(col("_metadata.file_path")) > wm))
+    val base = pruned.select(col("value").as("line"))
       .withColumn("file", input_file_name())
       .withColumn("file_no", fileNo(col("file")))
       .filter(length(trim(col("line"))) > 0)

@@ -23,16 +23,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * `(file STRING, file_no BIGINT, line_no BIGINT, line STRING)`; feed it to
   * [[graft.ingest.NdjsonReader.events]] for the parse/repair chain.
   *
-  * Why a V2 source when `spark.read.text + input_file_name()` works: the
-  * text-source watermark filter (`file_no > wm`) is evaluated PER ROW after
-  * every file is opened and read. This connector implements
-  * `SupportsPushDownFilters` on `file_no`, so the watermark prunes FILES at
-  * split planning — on a lake with years of revisions and a recent
-  * watermark, an incremental run opens only the new files, which is the
-  * reference's actual contract ("skip files ≤ last-read",
-  * `/root/reference/src/Commands/ProcessFilesCommand.php:47-55`). Pruning
-  * is advisory (exact at file granularity since `file_no` is constant per
-  * file): every filter is also returned as a post-scan residual, the same
+  * What this source adds over `spark.read.text + input_file_name()` (the
+  * batch path, [[graft.ingest.NdjsonReader.rawLines]]): not file pruning —
+  * the text path also skips files at or below the watermark at planning
+  * time, through a filter on `_metadata.file_path` — but `line_no`
+  * lineage (the 1-based physical line of each row in its file) and
+  * partitions in natural file order, one per file (below). Its own
+  * pruning is `SupportsPushDownFilters` on `file_no`; it is advisory
+  * (exact at file granularity since `file_no` is constant per file):
+  * every filter is also returned as a post-scan residual, the same
   * defensive stance parquet takes.
   *
   * Natural order: partition index = natural rank of the file (numeric
