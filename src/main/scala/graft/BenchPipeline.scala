@@ -50,7 +50,7 @@ object BenchPipeline {
     val t0 = System.nanoTime()
     val (nEvents, _) = Pipeline.run(spark, in.toString, out, None)
     val sec = (System.nanoTime() - t0) / 1e9
-    val nIdentity = spark.read.parquet(s"$out/identity").count()
+    val nIdentity = Pipeline.identitySnapshot(spark, out).count()
     println(f"""{"metric":"pipeline_rows_per_sec","value":${nEvents / sec}%.0f,"rows":$nEvents,"sec":$sec%.2f,"identity_rows":$nIdentity}""")
     spark.stop()
   }

@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.identity.{Components, IdentityEdges}
 import graft.ingest.{NdjsonReader, WatermarkStore}
@@ -17,9 +18,10 @@ import graft.ingest.{NdjsonReader, WatermarkStore}
   *  - events land date-partitioned (partition pruning for every downstream
   *    time-ranged query — the wide-table answer the reference's row store
   *    never had);
-  *  - identity = connected components over (person, alias) pairs, written
-  *    as `(id, canonical_id)` — the correct closure, not the reference's
-  *    G2 LIMIT-1 approximation;
+  *  - identity = connected components over (person, alias) pairs, kept
+  *    as append-only `(alias_id, canonical_id)` facts whose least
+  *    canonical id per alias is the current assignment — the correct
+  *    closure, not the reference's G2 LIMIT-1 approximation;
   *  - watermark only advances after both writes commit (the reference's
   *    rollback contract, `/root/reference/src/KissmetricsToDatabase.php:742-745`);
   *  - for continuous operation use graft.streaming.StreamIngest — same
@@ -27,27 +29,40 @@ import graft.ingest.{NdjsonReader, WatermarkStore}
   */
 object Pipeline {
 
-  /** Declared schema of the `$outDir/identity` snapshot: reading it with
+  /** Declared schema of the `$outDir/identity` facts: reading them with
     * this schema skips parquet's schema-inference job. */
   private val IdentitySchema = "alias_id string, canonical_id string"
 
+  /** Rows per identity-facts parquet file a batch appends (two short
+    * strings per row, so ~100 MB files at the top): a small delta writes
+    * one file, not one per shuffle partition. */
+  private val IdentityRowsPerFile = 4000000L
+
   /** One batch: the files after the watermark → events parquet (append) →
-    * identity closure parquet (overwrite, only when the batch carries an
-    * identity edge) → optional warehouse load → watermark advance.
+    * identity facts (append, only when the batch carries an identity edge)
+    * → optional warehouse load → watermark advance.
     *
     * The batch reads only what it needs: files at or below the watermark
-    * are pruned at planning time (see [[NdjsonReader.rawLines]]), one
-    * aggregate over the checkpointed events gives the event count, the
-    * batch's highest `file_no` and whether any row yields an identity
-    * edge, and the identity snapshot is read with its declared schema.
+    * are pruned at planning time (see [[NdjsonReader.rawLines]]), and the
+    * event count, the batch's highest `file_no` and whether any row yields
+    * an identity edge are observed on the events checkpoint job itself.
+    *
+    * Identity is append-only. A component only grows and its canonical id
+    * is the min of its nodes, so an alias's canonical id can only decrease:
+    * `$outDir/identity` holds `(alias_id, canonical_id)` facts, the current
+    * assignment of an alias is its least fact ([[identitySnapshot]]), and
+    * every fact, stale or not, is still a valid closure edge. A batch with
+    * an edge computes closure(facts ∪ its edges), takes Δ = the closure
+    * rows that are not yet facts (exactly the new and re-pointed aliases),
+    * upserts Δ into `tb_identity` by alias, then appends Δ to the facts.
+    * The facts are never overwritten, and a rerun after a crash between
+    * the upsert and the append recomputes the same Δ. A batch with no edge,
+    * or whose edges change no assignment, writes to neither.
     *
     * @param jdbcConnect when set, also load the warehouse the way the
     *        reference does: append this batch's events to `tb_event` and
-    *        refresh `tb_identity` with the current closure snapshot
-    *        (truncate + reload — the closure REWRITES assignments when a
-    *        bridge merges clusters, so append-only rows would go stale).
-    *        A batch that computed a closure loads it from its checkpoint;
-    *        otherwise the snapshot is re-read from parquet.
+    *        upsert Δ into `tb_identity` (one transaction, through the
+    *        staging table of [[graft.sink.JdbcSink.writeReplacing]]).
     * @return (events ingested, previous watermark or -1)
     */
   def run(spark: SparkSession, inDir: String, outDir: String,
@@ -55,12 +70,13 @@ object Pipeline {
           jdbcConnect: Option[() => java.sql.Connection] = None,
           jdbcMaxVarchar: Int = 65535): (Long, Long) = {
     val wm = watermarkFile.flatMap(WatermarkStore.read)
+    val batch = Observation("batch")
     val events = NdjsonReader.readEvents(spark, inDir, wm)
       .withColumn("event_date", to_date(col("ts")))
+      .observe(batch, count(lit(1)), max(col("file_no")), max(IdentityEdges.hasEdge))
       .localCheckpoint(eager = true) // read input once; feeds 3 consumers
 
-    val stats = events.agg(count(lit(1)), max(col("file_no")),
-      max(IdentityEdges.hasEdge)).head()
+    val stats = Components.observed(batch)
     val nEvents = stats.getLong(0)
     if (nEvents > 0) {
       events.write.mode("append")
@@ -68,30 +84,26 @@ object Pipeline {
         .parquet(s"$outDir/events")
 
       val idDir = s"$outDir/identity"
-      val closure = Option.when(stats.getBoolean(2)) {
+      val delta = Option.when(stats.getBoolean(2)) {
+        val facts = readFacts(spark, idDir)
         // alias events PLUS the reference's 'updated email' edge folding
-        // (person—new_email, new_email—previous_email)
-        val edges = IdentityEdges.fromEvents(events)
-        // Incremental merge: union the delta's edges with the EXISTING
-        // assignments (themselves edges node—canonical) before closure —
-        // otherwise a delta batch would overwrite the table with only its
-        // own components and a bridging edge would never merge two
-        // pre-existing clusters (the reference's G2 bug this engine fixes,
+        // (person—new_email, new_email—previous_email), unioned with the
+        // facts (themselves edges alias—canonical): without them a bridging
+        // edge would never merge two pre-existing clusters (the reference's
+        // G2 bug this engine fixes,
         // /root/reference/src/Operations/FileImporter.php:104-130).
-        val existing =
-          if (Files.exists(Paths.get(idDir)))
-            readIdentity(spark, idDir)
-              .select(col("alias_id").as("person"), col("canonical_id").as("alias"))
-          else spark.emptyDataFrame
-            .select(lit("").as("person"), lit("").as("alias")).limit(0)
-        val c = Components.connectedComponentsString(existing.union(edges))
+        // collisionFree: the assignments feed back as edges every batch, so
+        // an xxhash64 over-merge would be permanent.
+        val closure = Components.connectedComponentsString(
+          facts.union(IdentityEdges.fromEvents(events)), collisionFree = true)
           .withColumnRenamed("id", "alias_id")
-          // materialize off the source dir before overwriting it (write
-          // would otherwise truncate the parquet it is lazily reading)
+        // materialized off the facts dir before the append below
+        val changed = Observation("identity_delta")
+        val d = closure.join(facts, Seq("alias_id", "canonical_id"), "left_anti")
+          .observe(changed, count(lit(1)))
           .localCheckpoint(eager = true)
-        c.write.mode("overwrite").parquet(idDir)
-        c
-      }
+        (d, Components.observed(changed).getLong(0))
+      }.filter(_._2 > 0)
 
       // optional warehouse load — the reference's actual sink
       // (tb_event / tb_identity in Redshift): batched multi-row inserts
@@ -100,15 +112,15 @@ object Pipeline {
         graft.sink.JdbcSink.writeEvolving(
           events.drop("event_date"), "tb_event", connect,
           maxVarchar = jdbcMaxVarchar)
-        closure
-          .orElse(Option.when(Files.exists(Paths.get(idDir)))(readIdentity(spark, idDir)))
-          .foreach { ids =>
-            truncateIfExists(connect, "tb_identity")
-            graft.sink.JdbcSink.writeEvolving(
-              ids.withColumnRenamed("canonical_id", "id")
-                .withColumnRenamed("alias_id", "alias"),
-              "tb_identity", connect, maxVarchar = jdbcMaxVarchar)
-          }
+        delta.foreach { case (d, _) =>
+          graft.sink.JdbcSink.writeReplacing(
+            d.select(col("alias_id").as("alias"), col("canonical_id").as("id")),
+            "tb_identity", connect, keyCol = "alias", maxVarchar = jdbcMaxVarchar)
+        }
+      }
+      delta.foreach { case (d, n) =>
+        val files = math.max(1L, (n + IdentityRowsPerFile - 1) / IdentityRowsPerFile)
+        d.coalesce(files.toInt).write.mode("append").parquet(idDir)
       }
 
       watermarkFile.foreach(WatermarkStore.advance(_, stats.getLong(1)))
@@ -116,8 +128,18 @@ object Pipeline {
     (nEvents, wm.getOrElse(-1L))
   }
 
-  private def readIdentity(spark: SparkSession, idDir: String) =
-    spark.read.schema(IdentitySchema).parquet(idDir)
+  /** The current identity assignments under `outDir`: the least
+    * `canonical_id` of each alias's facts (see [[run]]); empty before the
+    * first identity edge. */
+  def identitySnapshot(spark: SparkSession, outDir: String): DataFrame =
+    readFacts(spark, s"$outDir/identity")
+      .groupBy("alias_id").agg(min("canonical_id").as("canonical_id"))
+
+  /** Every `(alias_id, canonical_id)` fact appended so far, stale ones
+    * included, as `(person, alias)`-shaped closure edges. */
+  private def readFacts(spark: SparkSession, idDir: String): DataFrame =
+    if (Files.exists(Paths.get(idDir))) spark.read.schema(IdentitySchema).parquet(idDir)
+    else spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(IdentitySchema))
 
   private[graft] def truncateIfExists(connect: () => java.sql.Connection,
                                table: String): Unit = {

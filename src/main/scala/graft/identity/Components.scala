@@ -1,6 +1,9 @@
 package graft.identity
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -246,12 +249,23 @@ object Components {
     connectedComponents(asEdges.union(ne))
   }
 
+  /** The metrics row an [[Observation]] collected on an action that has
+    * already run. Waits a bounded time for the listener that delivers it
+    * and fails loudly instead of hanging if it never arrives. */
+  private[graft] def observed(o: Observation): Row =
+    Await.result(o.future, 10.minutes)
+
   /** String-id convenience: hashes string identities to stable 64-bit ids,
     * runs CC on longs (8-byte shuffle keys instead of arbitrary strings —
     * the 100 TB version), then maps back and picks the min *string* per
     * component as canonical.
-    */
-  /** @param collisionFree when true, dictionary ids come from a
+    *
+    * The result is always materialized, so a caller may overwrite or append
+    * to the input's source without re-reading it: a local relation on the
+    * driver-finish path and for an empty edge set, a `localCheckpoint` on
+    * the distributed path.
+    *
+    * @param collisionFree when true, dictionary ids come from a
     *   zipWithIndex over the distinct identities instead of xxhash64 —
     *   two distinct strings can NEVER share a numeric id, at the cost of
     *   one extra pass + checkpoint over the (deduplicated) id dictionary.
@@ -266,13 +280,16 @@ object Components {
     import spark.implicits._
     val cols = edges.columns
     val e0 = edges.select(col(cols(0)).cast("string").as("a"), col(cols(1)).cast("string").as("b"))
-    // Normalize once and materialize: the count below is then free, and the
-    // dict/join path reads the checkpoint instead of re-scanning the input.
+    // Normalize once and materialize; the edge count is observed on the
+    // checkpoint job itself (no separate count job), and the dict/join path
+    // reads the checkpoint instead of re-scanning the input.
+    val counted = Observation("cc_edges")
     val e = e0
       .where($"a".isNotNull && $"b".isNotNull && $"a" =!= $"b")
       .distinct()
+      .observe(counted, count(lit(1)).as("n"))
       .localCheckpoint(eager = true)
-    val edgeCount = e.count()
+    val edgeCount = observed(counted).getLong(0)
     if (edgeCount == 0)
       return Seq.empty[(String, String)].toDF("id", "canonical_id")
     if (edgeCount <= driverFinishEdges) {

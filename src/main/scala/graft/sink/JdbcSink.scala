@@ -207,14 +207,11 @@ object JdbcSink {
     * (`/root/reference/src/Operations/FileImporter.php:142-163` commits per
     * file and rolls the watermark back on failure, so a crashed run replays).
     *
-    * Shape: stage the batch partition-parallel into `<table>_staging`, then
-    * ONE atomic `INSERT … SELECT … WHERE NOT EXISTS` keyed on `keyCol` (the
-    * O15 `md5hash` row fingerprint) moves only unseen rows into the target,
-    * and the staging table is dropped in the same transaction. The key
-    * anti-join runs in the database, so no key set ever transits the driver
-    * — this holds at a billion-row target where "SELECT all keys" cannot.
-    * A crash before the final statement leaves only a staging table that
-    * the next run drops; a crash after it is a completed load.
+    * Publishes through [[staged]] with ONE `INSERT … SELECT … WHERE NOT
+    * EXISTS` keyed on `keyCol` (the O15 `md5hash` row fingerprint): only
+    * unseen rows move into the target. The key anti-join runs in the
+    * database, so no key set ever transits the driver — this holds at a
+    * billion-row target where "SELECT all keys" cannot.
     *
     * Within-batch duplicates are the caller's concern
     * (`dropDuplicates(keyCol)` upstream — `dedup_exact` semantics).
@@ -223,18 +220,80 @@ object JdbcSink {
     */
   def writeIdempotent(df: DataFrame, table: String, connect: () => Connection,
                       keyCol: String = "md5hash", batchSize: Int = 1000,
-                      maxVarchar: Int = 65535): Long = {
+                      maxVarchar: Int = 65535): Long =
+    staged(df, table, connect, keyCol, batchSize, maxVarchar) { (conn, t, s, cols, k) =>
+      update(conn,
+        s"""INSERT INTO $t ($cols)
+            SELECT $cols FROM $s st
+            WHERE NOT EXISTS (SELECT 1 FROM $t tt WHERE tt.$k = st.$k)""")
+    }
+
+  /** Replace-by-key evolving write (an upsert): every row of `df` becomes
+    * THE row for its `keyCol` value — target rows sharing a staged key are
+    * deleted and the staged rows inserted, in one transaction through
+    * [[staged]]. Rows whose key is not staged are untouched.
+    *
+    * The delete is a batched `DELETE … WHERE key = ?` over the staged keys,
+    * one index probe each, so the write costs O(staged rows), not a scan or
+    * reload of the target: a set-based `DELETE … WHERE key IN (SELECT …
+    * FROM staging)` is planned by Derby as a hash semi-join that scans the
+    * whole target index.
+    *
+    * Idempotent: replaying the same frame deletes and re-inserts the same
+    * rows. Keys stay unique only if `df`'s are — within-batch duplicates
+    * are the caller's concern.
+    *
+    * @return rows inserted (= rows of `df`).
+    */
+  def writeReplacing(df: DataFrame, table: String, connect: () => Connection,
+                     keyCol: String, batchSize: Int = 1000,
+                     maxVarchar: Int = 65535): Long =
+    staged(df, table, connect, keyCol, batchSize, maxVarchar) { (conn, t, s, cols, k) =>
+      val keys = conn.createStatement()
+      val del = conn.prepareStatement(s"DELETE FROM $t WHERE $k = ?")
+      try {
+        val rs = keys.executeQuery(s"SELECT $k FROM $s")
+        var pending = 0
+        while (rs.next()) {
+          del.setObject(1, rs.getObject(1))
+          del.addBatch()
+          pending += 1
+          if (pending >= batchSize) { del.executeBatch(); pending = 0 }
+        }
+        if (pending > 0) del.executeBatch()
+      } finally { del.close(); keys.close() }
+      update(conn, s"INSERT INTO $t ($cols) SELECT $cols FROM $s")
+    }
+
+  private def update(conn: Connection, sql: String): Long = {
+    val st = conn.createStatement()
+    try st.executeUpdate(sql).toLong finally st.close()
+  }
+
+  /** The staging path shared by the keyed writes: ensure + evolve the
+    * target and an index on `keyCol`, stage the batch partition-parallel
+    * into a fresh `<table>_staging`, then ONE transaction runs `publish`
+    * (target, staging, quoted column list, quoted key — all quoted
+    * identifiers) and drops the staging table. A crash before the commit
+    * leaves only a staging table that the next run drops; a crash after it
+    * is a completed load.
+    *
+    * @return what `publish` returns.
+    */
+  private def staged(df: DataFrame, table: String, connect: () => Connection,
+      keyCol: String, batchSize: Int, maxVarchar: Int)(
+      publish: (Connection, String, String, String, String) => Long): Long = {
     require(df.columns.map(Sanitize.key(_).toLowerCase)
         .contains(Sanitize.key(keyCol).toLowerCase),
-      s"idempotent write needs key column '$keyCol' in the frame")
+      s"keyed write needs key column '$keyCol' in the frame")
     val staging = s"${table}_staging"
     val conn = connect()
     try {
       ensureAndEvolve(conn, table, df.schema, maxVarchar)
-      // the key anti-join is an index lookup per staged row WITH this
-      // index, a full target scan per staged row WITHOUT it (quadratic —
-      // measured: the 500 k-row BenchStreamPipeline never finished) —
-      // any warehouse doing keyed idempotent loads wants this index
+      // the key probe is an index lookup per staged row WITH this index, a
+      // full target scan per staged row WITHOUT it (quadratic — measured:
+      // the 500 k-row BenchStreamPipeline never finished) — any warehouse
+      // doing keyed loads wants this index
       ensureKeyIndex(conn, table, keyCol)
       if (tableExists(conn, staging)) execute(conn, s"DROP TABLE ${ident(staging)}")
       execute(conn, createTableSql(staging, df.schema, maxVarchar)
@@ -247,18 +306,10 @@ object JdbcSink {
     try {
       fin.setAutoCommit(false)
       val cols = df.schema.fields.map(f => ident(f.name)).mkString(", ")
-      val k = ident(keyCol)
-      val st = fin.createStatement()
-      val inserted =
-        try st.executeUpdate(
-          s"""INSERT INTO ${ident(table)} ($cols)
-              SELECT $cols FROM ${ident(staging)} s
-              WHERE NOT EXISTS (
-                SELECT 1 FROM ${ident(table)} t WHERE t.$k = s.$k)""")
-        finally st.close()
+      val n = publish(fin, ident(table), ident(staging), cols, ident(keyCol))
       execute(fin, s"DROP TABLE ${ident(staging)}")
       fin.commit()
-      inserted.toLong
+      n
     } catch {
       case e: Throwable => fin.rollback(); throw e
     } finally fin.close()

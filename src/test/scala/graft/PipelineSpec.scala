@@ -1,8 +1,15 @@
 package graft
 
+import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
 import java.nio.file.{Files, Paths}
+import java.sql.{Connection, DatabaseMetaData, PreparedStatement, Statement}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import scala.util.Random
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
@@ -18,9 +25,6 @@ object PipelineSpec {
   def connect(): java.sql.Connection =
     java.sql.DriverManager.getConnection("jdbc:derby:memory:graftpipe;create=true")
 
-  def connectNoEdgeDelta(): java.sql.Connection =
-    java.sql.DriverManager.getConnection("jdbc:derby:memory:graftpipenoedge;create=true")
-
   def query[A](connect: () => java.sql.Connection, sql: String)(
       f: java.sql.ResultSet => A): List[A] = {
     val conn = connect()
@@ -30,6 +34,90 @@ object PipelineSpec {
       finally rs.close()
     } finally conn.close()
   }
+
+  /** `tb_identity` as alias → id (empty before the table exists), failing
+    * on an alias stored twice. */
+  def tbIdentity(connect: () => java.sql.Connection): Map[String, String] = {
+    val exists = {
+      val conn = connect()
+      try {
+        val rs = conn.getMetaData.getTables(null, null, "tb_identity", null)
+        try rs.next() finally rs.close()
+      } finally conn.close()
+    }
+    if (!exists) return Map.empty
+    val rows = query(connect, """SELECT "alias", "id" FROM "tb_identity"""")(
+      r => r.getString(1) -> r.getString(2))
+    assert(rows.map(_._1).distinct.size == rows.size, s"an alias stored twice: $rows")
+    rows.toMap
+  }
+
+  /** A connection factory for in-memory Derby database `db` whose
+    * connections report to [[JdbcLog]]. */
+  def logged(db: String): () => java.sql.Connection = () =>
+    JdbcLog.wrap(classOf[Connection],
+      java.sql.DriverManager.getConnection(s"jdbc:derby:memory:$db;create=true"))
+
+  /** What the connections of [[logged]] were handed: every string argument
+    * (SQL text, a metadata table name) of every call on a connection, a
+    * statement or the metadata, and the rows INSERTs into `tb_identity`
+    * reported. Local mode runs the writer tasks in this JVM, so one
+    * global log sees them all. */
+  object JdbcLog {
+    val seen = new ConcurrentLinkedQueue[String]
+    val identityInserted = new AtomicLong
+
+    def reset(): Unit = { seen.clear(); identityInserted.set(0) }
+
+    def mentioning(table: String): List[String] =
+      seen.asScala.filter(_.contains(table)).toList
+
+    def wrap[T](iface: Class[T], target: AnyRef): T =
+      Proxy.newProxyInstance(getClass.getClassLoader, Array[Class[_]](iface),
+        new InvocationHandler {
+          override def invoke(p: AnyRef, m: Method, args: Array[AnyRef]): AnyRef = {
+            val as = Option(args).getOrElse(Array.empty[AnyRef])
+            as.foreach { case s: String => seen.add(s); case _ => () }
+            val out =
+              try m.invoke(target, as: _*)
+              catch { case e: InvocationTargetException => throw e.getCause }
+            as.headOption match {
+              case Some(sql: String) if m.getName == "executeUpdate" &&
+                  sql.trim.startsWith("INSERT INTO \"tb_identity\"") =>
+                identityInserted.addAndGet(out.asInstanceOf[Integer].longValue)
+              case _ => ()
+            }
+            out match {
+              case ps: PreparedStatement => wrap(classOf[PreparedStatement], ps)
+              case st: Statement         => wrap(classOf[Statement], st)
+              case md: DatabaseMetaData  => wrap(classOf[DatabaseMetaData], md)
+              case other                 => other
+            }
+          }
+        }).asInstanceOf[T]
+  }
+
+  /** Union-find oracle of the identity closure: every node of `edges` →
+    * the least node of its component (ASCII ids, so String order is the
+    * UTF-8 byte order the pipeline uses). */
+  def closure(edges: Seq[(String, String)]): Map[String, String] = {
+    val parent = mutable.Map.empty[String, String]
+    def find(x: String): String = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  /** Alias events, one per `(person, alias)` edge. */
+  def aliasLines(edges: Seq[(String, String)], t0: Long): Seq[String] =
+    edges.zipWithIndex.map { case ((p, a), i) =>
+      s"""{"_p": "$p", "_p2": "$a", "_n": "alias", "_t": "${t0 + i}"}"""
+    }
 }
 
 class PipelineSpec extends SparkSpec {
@@ -37,6 +125,22 @@ class PipelineSpec extends SparkSpec {
 
   private def put(dir: String, name: String, lines: String*): Unit =
     Files.writeString(Paths.get(dir, name), lines.mkString("\n"))
+
+  private def snapshot(out: String): Map[String, String] =
+    Pipeline.identitySnapshot(spark, out).as[(String, String)].collect().toMap
+
+  /** Every identity fact, stale ones included. */
+  private def facts(out: String): Seq[(String, String)] =
+    spark.read.parquet(s"$out/identity").select("alias_id", "canonical_id")
+      .as[(String, String)].collect().toSeq
+
+  private def factFiles(out: String): Set[java.nio.file.Path] =
+    if (!Files.exists(Paths.get(out, "identity"))) Set.empty
+    else {
+      val s = Files.list(Paths.get(out, "identity"))
+      try s.iterator().asScala.filter(_.getFileName.toString.contains("part-")).toSet
+      finally s.close()
+    }
 
   test("batch pipeline: ingest, identity closure, watermark advance, delta rerun") {
     val in = Files.createTempDirectory("pipe-in").toString
@@ -57,12 +161,12 @@ class PipelineSpec extends SparkSpec {
     assert(events.columns.contains("event_date"))
 
     // identity closure: alice <-> anon-1 in one cluster, canonical = min
-    val ids = spark.read.parquet(s"$out/identity")
-      .select("alias_id", "canonical_id").as[(String, String)].collect().toMap
+    val ids = snapshot(out)
     assert(ids("alice") == "alice" && ids("anon-1") == "alice")
 
-    // second run: nothing new -> no ingest
-    val (n2, prevWm2) = Pipeline.run(spark, in, out, Some(wmf))
+    // second run: nothing new -> no ingest (and the batch observation on
+    // the empty checkpoint still arrives)
+    val (n2, prevWm2) = within(2.minutes)(Pipeline.run(spark, in, out, Some(wmf)))
     assert(n2 == 0 && prevWm2 == 2L)
 
     // delta file -> only its rows are appended
@@ -72,16 +176,14 @@ class PipelineSpec extends SparkSpec {
     assert(n3 == 1)
     assert(spark.read.parquet(s"$out/events").count() == 4)
     // no alias edges in the delta -> identity table untouched
-    val ids3 = spark.read.parquet(s"$out/identity")
-      .select("alias_id", "canonical_id").as[(String, String)].collect().toMap
+    val ids3 = snapshot(out)
     assert(ids3 == ids)
 
     // delta with a NEW cluster {dave, anon-9}: prior assignments survive
     put(in, "4.json",
       """{"_p": "dave", "_p2": "anon-9", "_n": "alias", "_t": "1700000400"}""")
     Pipeline.run(spark, in, out, Some(wmf))
-    val ids4 = spark.read.parquet(s"$out/identity")
-      .select("alias_id", "canonical_id").as[(String, String)].collect().toMap
+    val ids4 = snapshot(out)
     assert(ids4("alice") == "alice" && ids4("anon-1") == "alice")
     // canonical = min STRING of the component: "anon-9" < "dave"
     assert(ids4("dave") == "anon-9" && ids4("anon-9") == "anon-9")
@@ -91,8 +193,7 @@ class PipelineSpec extends SparkSpec {
     put(in, "5.json",
       """{"_p": "anon-1", "_p2": "anon-9", "_n": "alias", "_t": "1700000500"}""")
     Pipeline.run(spark, in, out, Some(wmf))
-    val ids5 = spark.read.parquet(s"$out/identity")
-      .select("alias_id", "canonical_id").as[(String, String)].collect().toMap
+    val ids5 = snapshot(out)
     assert(ids5.values.toSet == Set("alice"),
       s"bridge must merge both clusters to min id, got $ids5")
     assert(ids5.keySet == Set("alice", "anon-1", "dave", "anon-9"))
@@ -107,8 +208,7 @@ class PipelineSpec extends SparkSpec {
       """{"_p": "anon-7", "_p2": "user@x.com", "_n": "alias", "_t": "1700000000"}""",
       """{"_p": "user@x.com", "_n": "updated email", "_t": "1700000100", "new_email": "u2@x.com", "previous_email": "user@x.com"}""")
     Pipeline.run(spark, in, out, None)
-    val ids = spark.read.parquet(s"$out/identity")
-      .select("alias_id", "canonical_id").as[(String, String)].collect().toMap
+    val ids = snapshot(out)
     // all four ids collapse to one cluster, canonical = min string
     assert(ids.keySet == Set("anon-7", "user@x.com", "u2@x.com"))
     assert(ids.values.toSet == Set("anon-7"))
@@ -128,8 +228,7 @@ class PipelineSpec extends SparkSpec {
       """{"_p": "dave", "_p2": "anon-9", "_n": "alias", "_t": "1700000100"}""")
     Pipeline.run(spark, in, out, Some(wmf), Some(connect), jdbcMaxVarchar = 4000)
     assert(query("""SELECT count(*) FROM "tb_event"""")(_.getLong(1)) == List(2L))
-    val ids1 = query("""SELECT "alias", "id" FROM "tb_identity"""")(
-      r => r.getString(1) -> r.getString(2)).toMap
+    val ids1 = PipelineSpec.tbIdentity(connect)
     assert(ids1("alice") == "alice" && ids1("anon-1") == "alice")
     assert(ids1("dave") == "anon-9")
 
@@ -139,8 +238,7 @@ class PipelineSpec extends SparkSpec {
       """{"_p": "anon-1", "_p2": "anon-9", "_n": "alias", "_t": "1700000200"}""")
     Pipeline.run(spark, in, out, Some(wmf), Some(connect), jdbcMaxVarchar = 4000)
     assert(query("""SELECT count(*) FROM "tb_event"""")(_.getLong(1)) == List(3L))
-    val ids2 = query("""SELECT "alias", "id" FROM "tb_identity"""")(
-      r => r.getString(1) -> r.getString(2)).toMap
+    val ids2 = PipelineSpec.tbIdentity(connect)
     assert(ids2.values.toSet == Set("alice"), s"stale assignments: $ids2")
     assert(ids2.keySet == Set("alice", "anon-1", "dave", "anon-9"))
   }
@@ -213,12 +311,10 @@ class PipelineSpec extends SparkSpec {
     val in = Files.createTempDirectory("pipe-noedge-in").toString
     val out = Files.createTempDirectory("pipe-noedge-out").toString
     val wmf = Files.createTempDirectory("pipe-noedge-wm").resolve("last").toString
-    val connect: () => java.sql.Connection = PipelineSpec.connectNoEdgeDelta _
+    val connect = PipelineSpec.logged("graftpipenoedge")
     def events(): Long =
       PipelineSpec.query(connect, """SELECT count(*) FROM "tb_event"""")(_.getLong(1)).head
-    def identity(): Map[String, String] =
-      PipelineSpec.query(connect, """SELECT "alias", "id" FROM "tb_identity"""")(
-        r => r.getString(1) -> r.getString(2)).toMap
+    def identity(): Map[String, String] = PipelineSpec.tbIdentity(connect)
 
     put(in, "1.json",
       """{"_p": "alice", "_p2": "anon-1", "_n": "alias", "_t": "1700000000"}""",
@@ -230,14 +326,20 @@ class PipelineSpec extends SparkSpec {
       "anon-9" -> "anon-9", "dave" -> "anon-9", "e@x" -> "e@x", "erin" -> "e@x"))
 
     // no alias, an empty _p2, and an 'updated email' without new_email:
-    // none is an edge, so no closure runs and tb_identity is reloaded
-    // from the existing snapshot
+    // none is an edge, so no closure runs and neither tb_identity nor the
+    // identity facts are touched
     put(in, "2.json",
       """{"_p": "bob", "_n": "view", "_t": "1700000200"}""",
       """{"_p": "carol", "_p2": "", "_n": "alias", "_t": "1700000300"}""",
       """{"_p": "alice", "_n": "updated email", "_t": "1700000400", "previous_email": "alice"}""")
+    val files = factFiles(out)
+    PipelineSpec.JdbcLog.reset()
     val (n2, _) = Pipeline.run(spark, in, out, Some(wmf), Some(connect), jdbcMaxVarchar = 4000)
     assert(n2 == 3)
+    assert(PipelineSpec.JdbcLog.mentioning("tb_event").nonEmpty, "the log saw the tb_event load")
+    assert(PipelineSpec.JdbcLog.mentioning("tb_identity").isEmpty,
+      PipelineSpec.JdbcLog.mentioning("tb_identity").mkString("\n"))
+    assert(factFiles(out) == files, "no facts appended")
     assert(events() == 6L)
     assert(identity() == ids1)
     val cols = PipelineSpec.query(connect,
@@ -245,6 +347,93 @@ class PipelineSpec extends SparkSpec {
          ON c.REFERENCEID = t.TABLEID WHERE t.TABLENAME = 'tb_identity'
          ORDER BY c.COLUMNNUMBER""")(_.getString(1))
     assert(cols == List("alias", "id"))
+  }
+
+  test("a bridging delta appends exactly its new and re-pointed aliases") {
+    val in = Files.createTempDirectory("pipe-delta-in").toString
+    val out = Files.createTempDirectory("pipe-delta-out").toString
+    val wmf = Files.createTempDirectory("pipe-delta-wm").resolve("last").toString
+    val connect = PipelineSpec.logged("graftpipedelta")
+    def run() = Pipeline.run(spark, in, out, Some(wmf), Some(connect), jdbcMaxVarchar = 4000)
+
+    val history = Seq("alice" -> "anon-1", "dave" -> "anon-9", "anon-9" -> "zoe",
+      "erin" -> "anon-5", "gus" -> "hal")
+    put(in, "1.json", PipelineSpec.aliasLines(history, 1700000000L): _*)
+    run()
+    val before = facts(out)
+    assert(before.toMap == PipelineSpec.closure(history) && before.size == before.toMap.size)
+
+    // anon-1—zoe bridges {alice, anon-1} and {anon-9, dave, zoe}: dave,
+    // anon-9 and zoe re-point to alice; ivy joins erin's cluster; {jo, kim}
+    // is new; {gus, hal} is untouched
+    val bridge = Seq("anon-1" -> "zoe", "ivy" -> "erin", "kim" -> "jo")
+    put(in, "2.json", PipelineSpec.aliasLines(bridge, 1700000100L): _*)
+    PipelineSpec.JdbcLog.reset()
+    run()
+    val want = PipelineSpec.closure(history ++ bridge)
+    val changed = want.filter { case (a, c) => !before.toMap.get(a).contains(c) }
+    assert(changed.keySet == Set("dave", "anon-9", "zoe", "ivy", "jo", "kim"))
+    val appended = facts(out).diff(before)
+    assert(appended.sorted == changed.toSeq.sorted)
+    assert(PipelineSpec.JdbcLog.identityInserted.get == changed.size)
+    assert(snapshot(out) == want)
+    assert(PipelineSpec.tbIdentity(connect) == want)
+  }
+
+  test("crash after the tb_identity upsert, before the facts append: a rerun matches a clean run") {
+    val batches = Seq(
+      Seq("alice" -> "anon-1", "dave" -> "anon-9"),
+      Seq("erin" -> "anon-5", "anon-9" -> "zoe"),
+      Seq("anon-1" -> "zoe", "erin" -> "fay"))
+    def setup(tag: String) = (Files.createTempDirectory(s"pipe-$tag-in").toString,
+      Files.createTempDirectory(s"pipe-$tag-out").toString,
+      Files.createTempDirectory(s"pipe-$tag-wm").resolve("last").toString,
+      PipelineSpec.logged(s"graftpipe$tag"))
+
+    val (cIn, cOut, cWm, cConnect) = setup("clean")
+    val (in, out, wmf, connect) = setup("crash")
+    batches.zipWithIndex.foreach { case (edges, i) =>
+      val name = s"${i + 1}.json"
+      put(cIn, name, PipelineSpec.aliasLines(edges, 1700000000L + 100 * i): _*)
+      Pipeline.run(spark, cIn, cOut, Some(cWm), Some(cConnect), jdbcMaxVarchar = 4000)
+      put(in, name, PipelineSpec.aliasLines(edges, 1700000000L + 100 * i): _*)
+      val kept = factFiles(out)
+      Pipeline.run(spark, in, out, Some(wmf), Some(connect), jdbcMaxVarchar = 4000)
+      if (i == batches.size - 1) {
+        // the kill: the last batch upserted tb_identity, but its facts and
+        // its watermark never landed
+        (factFiles(out) -- kept).foreach(Files.delete)
+        Files.writeString(Paths.get(wmf), i.toString)
+        Pipeline.run(spark, in, out, Some(wmf), Some(connect), jdbcMaxVarchar = 4000)
+      }
+    }
+    val want = PipelineSpec.closure(batches.flatten)
+    assert(snapshot(cOut) == want && PipelineSpec.tbIdentity(cConnect) == want)
+    assert(snapshot(out) == snapshot(cOut))
+    assert(PipelineSpec.tbIdentity(connect) == PipelineSpec.tbIdentity(cConnect))
+  }
+
+  test("seeded deltas with bridges: snapshot = tb_identity = union-find after each") {
+    val in = Files.createTempDirectory("pipe-rand-in").toString
+    val out = Files.createTempDirectory("pipe-rand-out").toString
+    val wmf = Files.createTempDirectory("pipe-rand-wm").resolve("last").toString
+    val connect = PipelineSpec.logged("graftpiperand")
+    val rnd = new Random(7)
+    val seen = mutable.ArrayBuffer.empty[(String, String)]
+    (1 to 8).foreach { f =>
+      // ids from a small pool, so later deltas bridge earlier clusters; a
+      // quarter of the deltas carry no edge at all
+      val edges = if (f % 4 == 3) Seq.empty
+        else Seq.fill(1 + rnd.nextInt(5))(s"u${rnd.nextInt(30)}" -> s"u${rnd.nextInt(30)}")
+      seen ++= edges
+      put(in, s"$f.json", (s"""{"_p": "v$f", "_n": "view", "_t": "${1700000000L + 100 * f}"}""" +:
+        PipelineSpec.aliasLines(edges, 1700000001L + 100 * f)): _*)
+      Pipeline.run(spark, in, out, Some(wmf), Some(connect), jdbcMaxVarchar = 4000)
+      val want = PipelineSpec.closure(seen.toSeq).filter { case (a, _) =>
+        seen.exists { case (p, q) => p != q && (p == a || q == a) } }
+      assert(snapshot(out) == want, s"snapshot after delta $f")
+      assert(PipelineSpec.tbIdentity(connect) == want, s"tb_identity after delta $f")
+    }
   }
 
   test("compaction reduces file count, preserves rows") {

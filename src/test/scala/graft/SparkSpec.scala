@@ -1,5 +1,8 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.FiniteDuration
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * fast; suites must not stop it). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Runs `body`, failing the test with a timeout instead of hanging the
+    * suite when it does not return within `limit`. */
+  def within[A](limit: FiniteDuration)(body: => A): A =
+    Await.result(Future(body)(ExecutionContext.global), limit)
 }
 
 object SparkSpec {

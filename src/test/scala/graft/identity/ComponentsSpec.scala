@@ -1,5 +1,6 @@
 package graft.identity
 
+import scala.concurrent.duration._
 import scala.util.Random
 
 import graft.SparkSpec
@@ -247,5 +248,17 @@ class ComponentsSpec extends SparkSpec {
   test("self-loops and duplicate edges are harmless") {
     val got = sparkCC(Seq((1L, 1L), (1L, 2L), (1L, 2L), (2L, 1L)))
     assert(got == Map(1L -> 1L, 2L -> 1L))
+  }
+
+  test("the observed edge count arrives for empty and self-loop-only input") {
+    val cases = Seq(
+      "empty" -> Seq.empty[(String, String)].toDF("a", "b"),
+      "limit(0)" -> Seq(("x", "y")).toDF("a", "b").limit(0),
+      "self-loops only" -> Seq(("x", "x"), ("y", "y")).toDF("a", "b"))
+    for ((name, edges) <- cases; finish <- Seq(Components.DefaultDriverFinishEdges, 0L)) {
+      val got = within(2.minutes)(
+        Components.connectedComponentsString(edges, driverFinishEdges = finish).collect())
+      assert(got.isEmpty, s"$name (driverFinishEdges=$finish)")
+    }
   }
 }

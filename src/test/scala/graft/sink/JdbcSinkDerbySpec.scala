@@ -71,6 +71,46 @@ class JdbcSinkDerbySpec extends SparkSpec {
     } finally conn.close()
   }
 
+  test("writeReplacing: replacing by key twice equals once; keys unique, column order kept") {
+    val connect: () => java.sql.Connection = JdbcSinkDerbySpec.connect _
+    def table(): List[(String, String)] = {
+      val conn = connect()
+      try {
+        val rs = conn.createStatement().executeQuery(
+          """SELECT "alias", "id" FROM "tb_repl" ORDER BY "alias"""")
+        try Iterator.continually(rs).takeWhile(_.next())
+          .map(r => r.getString(1) -> r.getString(2)).toList
+        finally rs.close()
+      } finally conn.close()
+    }
+
+    val base = Seq(("a", "a"), ("b", "a"), ("c", "c"), ("e", "c")).toDF("alias", "id")
+    assert(JdbcSink.writeReplacing(base, "tb_repl", connect, keyCol = "alias",
+      maxVarchar = 4000) == 4L)
+    // c is re-pointed, d is new, the other keys are not staged
+    val up = Seq(("c", "a"), ("d", "a")).toDF("alias", "id")
+    assert(JdbcSink.writeReplacing(up, "tb_repl", connect, keyCol = "alias",
+      maxVarchar = 4000) == 2L)
+    val once = table()
+    assert(once == List("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a", "e" -> "c"))
+    assert(JdbcSink.writeReplacing(up, "tb_repl", connect, keyCol = "alias",
+      maxVarchar = 4000) == 2L)
+    assert(table() == once, "a replayed replace must not change the table")
+
+    val conn = connect()
+    try {
+      val rs = conn.createStatement().executeQuery(
+        """SELECT c.COLUMNNAME FROM SYS.SYSCOLUMNS c JOIN SYS.SYSTABLES t
+           ON c.REFERENCEID = t.TABLEID WHERE t.TABLENAME = 'tb_repl'
+           ORDER BY c.COLUMNNUMBER""")
+      val cols = try Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toList
+        finally rs.close()
+      assert(cols == List("alias", "id"))
+      val meta = conn.getMetaData.getTables(null, null, "tb_repl_staging", null)
+      try assert(!meta.next(), "staging table left behind") finally meta.close()
+    } finally conn.close()
+  }
+
   test("numeric bind types round-trip (Float, BigDecimal, Short, Byte)") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
